@@ -36,6 +36,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from feature_datalake_sl_mandic_spark.ingest import history as hist
 from feature_datalake_sl_mandic_spark.sources.txlog import TxTable
 
 CDF_OP_PREFIX = "apply_cdf:src="
@@ -162,15 +163,13 @@ def ingest_incremental_cdf(
     batch the missing row belonged to."""
     summary = apply_cdf_batch(spark, source, target, key)
     if summary["applied"] and lake_dir is not None:
-        from feature_datalake_sl_mandic_spark.ingest.history import append_run
-
-        append_run(
+        n = summary["n_insert"] + summary["n_update"] + summary["n_delete"]
+        hist.append_run(
             spark,
             lake_dir,
-            table_name=table_name or target.path.rsplit("/", 1)[-1],
-            database=database,
-            row_count=summary["n_insert"] + summary["n_update"] + summary["n_delete"],
-            execution_time=execution_time,
+            database,
+            [(table_name or target.path.rsplit("/", 1)[-1], n)],
+            execution_time,
         )
     return summary
 

@@ -1,7 +1,7 @@
 """Run-history audit log (``historico_execucao`` parity).
 
-The reference appends one metadata row per ingest run to a BigQuery table
-``Historico_Execucao`` (schema at ``spark_ingest_slmandicprd.py:115-132``,
+The reference appends one metadata row per ingested table to a BigQuery
+table ``Historico_Execucao`` (schema at ``spark_ingest_slmandicprd.py:115-132``,
 append at ``:136-141``) and later reads it back with a 30-day
 partition-pruned MAX…GROUP BY in BigQuery SQL
 (``verifica_carga_slmandicprd.py:74-82``).
@@ -9,6 +9,14 @@ partition-pruned MAX…GROUP BY in BigQuery SQL
 Here the history is a date-partitioned parquet table; ``latest_runs`` is the
 same aggregation as a DataFrame plan, so the partition filter prunes files
 (partition column = execution_date) instead of relying on a warehouse.
+
+History is written once per run: ``append_run`` takes all of a run's rows
+and appends them in one Spark job. A plain parquet directory has no commit
+protocol, so concurrent appends to it (one per pipeline worker thread) clash
+on the shared ``_temporary`` directory and can leave duplicate rows; a
+single writer per run cannot. Every row of a run carries the same timestamp,
+taken before any source is read, so a source change that lands mid-run is
+newer than the run and is picked up by the next one.
 
 Anti-pattern fixed (SURVEY.md §4): the reference re-scans the whole source
 with ``df.count()`` *after* writing (``spark_ingest_slmandicprd.py:108``).
@@ -50,28 +58,37 @@ def history_path(lake_dir: str) -> str:
     return os.path.join(lake_dir, "meta", "historico_execucao")
 
 
+def utcnow() -> dt.datetime:
+    """Naive UTC timestamp, the history's ``execution_time`` convention."""
+    return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+
+
 def append_run(
     spark: SparkSession,
     lake_dir: str,
-    table_name: str,
     database: str,
-    row_count: int,
+    rows: list[tuple[str, int]],
     execution_time: dt.datetime | None = None,
 ) -> None:
-    """Append one audit row (S8/S11 parity), partitioned by execution_date so
-    the freshness lookup partition-prunes."""
-    execution_time = execution_time or dt.datetime.now(dt.timezone.utc).replace(
-        tzinfo=None
-    )
-    row = Row(
-        table_name=table_name,
-        name_dataBase=database,
-        row_count=int(row_count),
-        execution_date=execution_time.date(),
-        execution_time=execution_time,
-    )
+    """Append one run's audit rows, ``(table_name, row_count)`` each, in one
+    write (S8/S11 parity), partitioned by execution_date so the freshness
+    lookup partition-prunes. No rows, no write."""
+    if not rows:
+        return
+    execution_time = execution_time or utcnow()
+    records = [
+        Row(
+            table_name=table_name,
+            name_dataBase=database,
+            row_count=int(row_count),
+            execution_date=execution_time.date(),
+            execution_time=execution_time,
+        )
+        for table_name, row_count in rows
+    ]
     (
-        spark.createDataFrame([row], schema=HISTORY_SCHEMA)
+        spark.createDataFrame(records, schema=HISTORY_SCHEMA)
+        .coalesce(1)
         .write.mode("append")
         .partitionBy("execution_date")
         .parquet(history_path(lake_dir))
@@ -83,10 +100,14 @@ def latest_runs(
 ) -> DataFrame:
     """(table_name, last_exec): MAX(execution_time) per table over the last N
     days — the reference's BQ query (``verifica_carga_slmandicprd.py:74-82``)
-    as a partition-pruned DataFrame aggregation."""
+    as a partition-pruned DataFrame aggregation. No history yet (first load)
+    gives no rows; any other read error raises."""
+    path = history_path(lake_dir)
+    if not os.path.exists(path):
+        return spark.createDataFrame([], "table_name string, last_exec timestamp")
     cutoff = F.current_timestamp() - F.expr(f"INTERVAL {int(lookback_days)} DAYS")
     return (
-        spark.read.parquet(history_path(lake_dir))
+        spark.read.parquet(path)
         .where(F.col("execution_date") >= F.to_date(cutoff))
         .groupBy("table_name")
         .agg(F.max("execution_time").alias("last_exec"))

@@ -15,12 +15,16 @@ import json
 import os
 
 
-def write_manifest(path: str, tables: list[str]) -> None:
+def write_json(path: str, payload: object) -> None:
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(sorted(tables), f)
-    os.replace(tmp, path)  # atomic: readers never see a torn manifest
+        json.dump(payload, f, indent=2, sort_keys=True)
+    os.replace(tmp, path)  # atomic: readers never see a torn file
+
+
+def write_manifest(path: str, tables: list[str]) -> None:
+    write_json(path, sorted(tables))
 
 
 def read_manifest(path: str) -> list[str]:

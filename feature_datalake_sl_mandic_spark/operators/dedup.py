@@ -1114,7 +1114,8 @@ def dedup_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _containment_pairs. Without the pin, Catalyst reads the pinned dg
     # relation's statistics as broadcastable and broadcasts a corpus-scale
     # side: fine at sf0.1, an 8g-driver OOM on the 100x broadcast probe
-    # (round 11), fatal at 100 TB. AQE may still upgrade from RUNTIME sizes.
+    # (round 11), fatal at 100 TB. The user hint survives AQE re-planning,
+    # so the join stays sort-merge at runtime too.
     return (
         dg.join(dfr.hint("merge"), "h")
         .groupBy("doc_id", "lang")

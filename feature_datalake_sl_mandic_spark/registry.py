@@ -311,10 +311,7 @@ _PRIORITY: list[str] = [
 
 def load_all() -> dict[str, QuerySpec]:
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
+        importlib.import_module(mod)
     ordered: dict[str, QuerySpec] = {}
     for name in _PRIORITY:
         if name in _REGISTRY:

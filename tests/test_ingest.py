@@ -19,6 +19,7 @@ from feature_datalake_sl_mandic_spark.ingest.type_mapping import (
     schema_to_ddl,
     spark_to_target_type,
 )
+from tests.conftest import SF_SMALL
 
 TS = dt.datetime(2024, 1, 15, 12, 0, 0)
 CATALOG_SCHEMA = T.StructType(
@@ -259,6 +260,79 @@ class TestPipeline:
         )
         assert {r.table for r in results2} == {"bad"}
         assert results2[0].status == "failed"
+
+    def test_one_history_write_per_run(self, spark, tmp_path, monkeypatch):
+        """The 4-thread pool only writes data: the run appends its history
+        once, after the pool, with exactly one row per ingested table, all
+        stamped with the run's single timestamp."""
+        from pyspark.sql import functions as F
+
+        from feature_datalake_sl_mandic_spark.ingest import history as hist
+        from feature_datalake_sl_mandic_spark.ingest.pipeline import run_pipeline
+
+        tables = ["customer", "nation", "orders", "part", "region", "supplier"]
+        sources = {
+            t: spark.read.parquet(f"{SF_SMALL}/{t}.parquet") for t in tables
+        }
+        catalog = spark.createDataFrame(
+            [(t, dt.datetime.now()) for t in tables], CATALOG_SCHEMA
+        )
+        calls = []
+        real_append = hist.append_run
+
+        def spy(*args, **kwargs):
+            calls.append(args)
+            return real_append(*args, **kwargs)
+
+        monkeypatch.setattr(hist, "append_run", spy)
+        lake_dir = str(tmp_path / "lake")
+        results = run_pipeline(spark, catalog, sources, lake_dir, "testdb")
+        assert sorted(r.table for r in results) == tables
+        assert all(r.status == "ok" and r.attempts == 1 for r in results)
+        assert len(calls) == 1
+
+        history = spark.read.parquet(hist.history_path(lake_dir))
+        per_table = {
+            r["table_name"]: r["n"]
+            for r in history.groupBy("table_name").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        assert per_table == {t: 1 for t in tables}
+        assert history.select("execution_time").distinct().count() == 1
+
+    def test_history_write_failure_raises_without_rewrite(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from feature_datalake_sl_mandic_spark.ingest import history as hist
+        from feature_datalake_sl_mandic_spark.ingest import pipeline
+
+        ingested = []
+        real_ingest = pipeline.ingest_table
+
+        def count_ingest(*args):
+            ingested.append(args[4])
+            return real_ingest(*args)
+
+        def broken_append(*args, **kwargs):
+            raise RuntimeError("history unavailable")
+
+        monkeypatch.setattr(pipeline, "ingest_table", count_ingest)
+        monkeypatch.setattr(hist, "append_run", broken_append)
+        sources = {
+            t: spark.read.parquet(f"{SF_SMALL}/{t}.parquet") for t in ("nation", "region")
+        }
+        catalog = spark.createDataFrame(
+            [(t, dt.datetime.now()) for t in sources], CATALOG_SCHEMA
+        )
+        with pytest.raises(RuntimeError, match="history unavailable"):
+            pipeline.run_pipeline(spark, catalog, sources, str(tmp_path / "lake"), "testdb")
+        assert sorted(ingested) == ["nation", "region"]
+
+    def test_latest_runs_without_history_is_empty(self, spark, tmp_path):
+        from feature_datalake_sl_mandic_spark.ingest import history as hist
+
+        latest = hist.latest_runs(spark, str(tmp_path / "lake"))
+        assert latest.columns == ["table_name", "last_exec"]
+        assert latest.collect() == []
 
     def test_observed_count_no_second_scan(self, spark, tmp_path):
         from feature_datalake_sl_mandic_spark.ingest.history import observed_count
