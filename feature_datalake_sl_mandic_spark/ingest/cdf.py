@@ -73,7 +73,7 @@ def bootstrap_cdf(
         raise FileExistsError(f"target already exists at {target_path}")
     df = source.read(spark, version=v)
     files = target._write_files(df)
-    target._commit(files, f"{CDF_OP_PREFIX}{v}", df.schema.json())
+    target._commit(f"{CDF_OP_PREFIX}{v}", df.schema.json(), files, None)
     return target
 
 
@@ -116,7 +116,7 @@ def apply_cdf_batch(
         for r in feed.groupBy("_change_type").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     snap = target.snapshot()
-    current = target.read(spark)
+    current = target.read(spark, version=snap.version)
     upserts = feed.where(
         F.col("_change_type").isin("insert", "update_postimage")
     ).drop("_change_type")
@@ -127,12 +127,8 @@ def apply_cdf_batch(
         current.join(changed_keys, on=key, how="left_anti")
         .unionByName(upserts.select(*current.columns))
     )
-    files = target._write_files(merged)
     tv = target._commit(
-        files,
-        f"{CDF_OP_PREFIX}{to_v}",
-        snap.schema_json,
-        expected_version=snap.version,
+        f"{CDF_OP_PREFIX}{to_v}", snap.schema_json, target._write_files(merged), snap
     )
     summary.update(
         applied=True,
@@ -174,54 +170,7 @@ def ingest_incremental_cdf(
     return summary
 
 
-from feature_datalake_sl_mandic_spark.registry import register  # noqa: E402
-
-# Scratch txlog roots for the registered query: one SHARED root per sf_dir
-# (removed at process exit), with a fresh uuid-named subdirectory per
-# EXECUTION and the previous execution's subdir deleted on entry (round-9
-# advice). The footprint stays bounded at ~one live lake copy per sf_dir
-# (the round-8 leak fix), and SEQUENTIAL executions never share a live
-# txlog path: a still-unconsumed DataFrame from execution N-1 goes stale
-# only when execution N starts tearing its subdir down. CONCURRENT
-# executions against the SAME sf_dir are NOT supported (round-10 advice —
-# the earlier comment overclaimed): the swap is lock-atomic, but the
-# rmtree of the superseded subdir runs outside the lock and would tear
-# down a subdir an overlapping execution just allocated and is still
-# writing. Concurrent executions against DIFFERENT sf_dirs are safe
-# (disjoint entries, deletion only touches the same-sf_dir predecessor).
-_SCRATCH_BY_SF: dict[str, tuple[str, str]] = {}  # sf_dir -> (root, live subdir)
-# Created at import (round-10 advice): the lazy `if None: Lock()` pattern
-# was itself a check-then-act race that could hand two threads different
-# locks; threading is stdlib and the import cost is negligible.
-import threading as _threading  # noqa: E402
-
-_SCRATCH_LOCK = _threading.Lock()
-
-
-def _scratch_dir(sf_dir: str) -> str:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    with _SCRATCH_LOCK:
-        entry = _SCRATCH_BY_SF.get(sf_dir)
-        if entry is None:
-            root = tempfile.mkdtemp(prefix="cdf_query_")
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
-            prev = None
-        else:
-            root, prev = entry
-        d = os.path.join(root, uuid.uuid4().hex)
-        os.makedirs(d, exist_ok=True)
-        _SCRATCH_BY_SF[sf_dir] = (root, d)
-    # delete the superseded subdir OUTSIDE the lock (it can hold a full
-    # table copy; holding the lock through the rmtree would serialize
-    # concurrent executions on IO)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    return d
+from feature_datalake_sl_mandic_spark.registry import register, scratch_dir  # noqa: E402
 
 
 @register(
@@ -266,7 +215,7 @@ def cdf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bal"),
         F.col("c_mktsegment").alias("seg"),
     )
-    scratch = _scratch_dir(sf_dir)
+    scratch = scratch_dir("cdf_incremental_ingest", sf_dir)
     source = TxTable.create(spark, os.path.join(scratch, "src"), v0)
     source.overwrite(v1)
     target = bootstrap_cdf(

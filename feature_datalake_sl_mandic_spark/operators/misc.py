@@ -18,7 +18,7 @@ from feature_datalake_sl_mandic_spark.functions.hashing import (
     md5_bucket_sql,
 )
 from feature_datalake_sl_mandic_spark.operators.relational import _t
-from feature_datalake_sl_mandic_spark.registry import register
+from feature_datalake_sl_mandic_spark.registry import register, scratch_dir
 
 
 @register(
@@ -636,8 +636,6 @@ def txlog_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     SNAPSHOT. Verifies real table-format IO — manifest commit, immutable data
     files, snapshot read — not just the join shape (merge_upsert_orders
     covers that); the oracle recomputes the merged state relationally."""
-    import tempfile
-
     from feature_datalake_sl_mandic_spark.sources.txlog import TxTable
 
     (od,) = _t(spark, sf_dir, "orders")
@@ -661,7 +659,7 @@ def txlog_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    t = TxTable.create(spark, tempfile.mkdtemp(prefix="txlog_q_"), base)
+    t = TxTable.create(spark, scratch_dir("txlog_merge_upsert", sf_dir), base)
     t.merge(spark, updates, key="okey")
     return (
         t.read(spark)  # the committed post-merge snapshot, not the plan
@@ -815,8 +813,6 @@ def txlog_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from writer-side bookkeeping. The oracle recomputes the expected diff
     relationally; hash equality proves insert/delete/update classification
     and both update images."""
-    import tempfile
-
     from feature_datalake_sl_mandic_spark.sources.txlog import TxTable
 
     (od,) = _t(spark, sf_dir, "orders")
@@ -840,7 +836,7 @@ def txlog_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    t = TxTable.create(spark, tempfile.mkdtemp(prefix="txlog_cdf_"), base)
+    t = TxTable.create(spark, scratch_dir("txlog_change_data_feed", sf_dir), base)
     t.merge(spark, updates, key="okey")
     t.delete_where(spark, "okey", 100, 2000)
     return t.change_feed(spark, key="okey", from_version=0).orderBy(

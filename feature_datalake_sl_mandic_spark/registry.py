@@ -18,7 +18,11 @@ differences between engines.
 
 from __future__ import annotations
 
+import atexit
 import importlib
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -77,6 +81,34 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
         return fn
 
     return deco
+
+
+# (query, sf_dir) -> (root, live subdir) for queries that write table copies
+_SCRATCH: dict[tuple[str, str], tuple[str, str]] = {}
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch_dir(query: str, sf_dir: str) -> str:
+    """A fresh directory for one execution of ``query`` over ``sf_dir``.
+
+    The same pair's previous directory is deleted, so at most one table copy
+    per pair stays on disk, and its root is removed at process exit. A
+    DataFrame still unconsumed from the previous execution goes stale then.
+    Two executions of the same pair must not overlap: the second deletes the
+    first one's live directory."""
+    with _SCRATCH_LOCK:
+        entry = _SCRATCH.get((query, sf_dir))
+        if entry is None:
+            root, prev = tempfile.mkdtemp(prefix=f"{query}_"), None
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+        else:
+            root, prev = entry
+        d = tempfile.mkdtemp(dir=root)
+        _SCRATCH[(query, sf_dir)] = (root, d)
+    # outside the lock: it can hold a full table copy
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    return d
 
 
 # The driver's correctness gate checks the FIRST 50 entries in iteration

@@ -14,10 +14,13 @@ Layout::
 
 Guarantees (and their mechanisms):
 
-- **Atomic commit**: a version is claimed by ``os.link(tmp, vN.json)`` —
+- **One commit rule**: every operation reads a base version, builds the
+  WHOLE next manifest (file list + per-file stats) from it and claims
+  ``base + 1`` (v0 for a new table) with ``os.link(tmp, vN.json)`` —
   hard-link creation is atomic and fails if the name exists, so exactly one
-  writer wins a version number; losers retry against the new latest
-  (optimistic concurrency). Readers only ever see fully-written manifests.
+  writer wins a version number. A loser gets ``TxConflict``; only append
+  and overwrite, which commute with any commit, re-read the latest version
+  and retry. Readers only ever see fully-written manifests.
 - **Snapshot isolation**: a reader resolves a manifest once and reads only
   the files it lists; since data files are immutable and never deleted by
   logical operations, the snapshot stays consistent for the reader's
@@ -26,13 +29,11 @@ Guarantees (and their mechanisms):
   (``maintenance.compact_table``), the table path never disappears —
   compaction/overwrite commit a new manifest and old files linger until
   ``vacuum``.
-- **Serializable rewrites**: operations that rewrite existing data (merge,
-  compact, rollback-target checks) pass ``expected_version``; if another
-  commit landed in between, the commit raises ``TxConflict`` instead of
-  silently clobbering — append-only commits instead merge file lists and
-  retry.
+- **Serializable rewrites**: merge, delete, compact and rollback read
+  ``base`` and write from that same snapshot, so a commit that landed in
+  between makes them raise instead of silently clobbering it.
 - **Time travel / rollback**: any historical version is readable; rollback
-  is a NEW commit whose file list equals the old version's (history is
+  is a NEW commit whose manifest equals the old version's (history is
   append-only, like Delta's RESTORE).
 
 At 100 TB the same design holds: manifests carry file paths (O(files), kept
@@ -83,9 +84,40 @@ class TxSnapshot:
                 kept.append(f)
         return kept
 
+    def entries(self) -> dict[str, dict[str, list]]:
+        """``{path: stats}`` for every file: the manifest ``_commit`` takes."""
+        stats = self.stats or {}
+        return {f: stats.get(f, {}) for f in self.files}
+
+
+_MAX_REBASES = 20
+
 
 def _vname(version: int) -> str:
     return f"v{version:010d}.json"
+
+
+def _footer_stats(md) -> dict[str, list]:
+    """Column [min, max] of one file from its parquet footer (no data read) —
+    the manifest-embedded statistics data skipping prunes on. Only
+    JSON-stable scalar types are kept; other columns are simply not
+    skippable. O(files) driver work per write, the same trade Iceberg makes
+    writing manifest entries."""
+    cols: dict[str, list] = {}
+    for ci, name in enumerate(md.schema.names):
+        mins, maxs = [], []
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(ci).statistics
+            if st is None or not st.has_min_max:
+                mins = []
+                break
+            mins.append(st.min)
+            maxs.append(st.max)
+        if mins and all(
+            isinstance(v, (int, float, str, bool)) for v in (min(mins), max(maxs))
+        ):
+            cols[name] = [min(mins), max(maxs)]
+    return cols
 
 
 class TxTable:
@@ -121,108 +153,71 @@ class TxTable:
 
     def _commit(
         self,
-        new_files: list[str],
         op: str,
         schema_json: str,
-        base_files: list[str] | None = None,
-        expected_version: int | None = None,
-        keep_files: list[str] | None = None,
-        max_retries: int = 20,
+        files: dict[str, dict[str, list]],
+        base: TxSnapshot | None,
     ) -> int:
-        """Atomically claim the next version. ``base_files=None`` means the
-        manifest REPLACES the file list (overwrite/merge/compact/rollback);
-        otherwise the commit is an append on top of whatever is latest at
-        claim time. ``expected_version`` makes replacing ops serializable."""
+        """Write the manifest ``files`` (``{path: stats}``, the whole file
+        list) as version ``base.version + 1``, or v0 when ``base`` is None.
+        Raises ``TxConflict`` when that version exists: another writer
+        committed after ``base`` was read."""
+        v = 0 if base is None else base.version + 1
         os.makedirs(self.log_dir, exist_ok=True)
-        new_stats = self._collect_stats(new_files)
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            if expected_version is not None and latest != expected_version:
-                raise TxConflict(
-                    f"expected v{expected_version}, found v{latest}: "
-                    "a concurrent commit landed; re-run against the new snapshot"
-                )
-            next_v = 0 if latest is None else latest + 1
-            if base_files is not None:
-                # pin to the claimed base version: snapshot() could read a
-                # manifest newer than `latest` and desync files from next_v
-                base = (
-                    self.snapshot(latest) if latest is not None else None
-                )
-                files = (base.files if base else []) + new_files
-                stats = {**((base.stats if base else None) or {}), **new_stats}
-            elif keep_files is not None:
-                # partial rewrite (delete): untouched files carry their
-                # existing stats forward, rewritten survivors get fresh ones
-                prev = self.snapshot(latest).stats or {} if latest is not None else {}
-                files = keep_files + new_files
-                stats = {f: prev[f] for f in keep_files if f in prev}
-                stats.update(new_stats)
-            else:
-                files = new_files
-                stats = new_stats
-            # rollback re-commits old files: their stats live in the old
-            # manifest — carry them forward so skipping survives restores
-            if not stats and op.startswith("rollback:"):
-                old = self.snapshot(int(op.split(":", 1)[1]))
-                stats = old.stats or {}
-            tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"files": files, "schema": schema_json, "op": op, "stats": stats},
-                    f,
-                )
-            target = os.path.join(self.log_dir, _vname(next_v))
+        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
+        with open(tmp, "w") as f:
+            json.dump(
+                {"files": list(files), "schema": schema_json, "op": op, "stats": files},
+                f,
+            )
+        try:
+            os.link(tmp, os.path.join(self.log_dir, _vname(v)))  # fails iff v exists
+        except FileExistsError:
+            raise TxConflict(
+                f"{op}: v{v} was committed by another writer; "
+                "re-run against the new snapshot"
+            ) from None
+        finally:
+            os.unlink(tmp)
+        return v
+
+    def _commit_on_latest(self, op: str, schema_json: str, files_on) -> int:
+        """Commit ``files_on(base)`` on the latest version, re-reading it and
+        retrying when another writer claims the next version first. Only for
+        operations that commute with any commit: append (its files go on top
+        of whatever landed) and overwrite (it replaces it)."""
+        for _ in range(_MAX_REBASES):
+            v = self.latest_version()
+            base = None if v is None else self.snapshot(v)
             try:
-                os.link(tmp, target)  # atomic claim: fails iff version exists
-                os.unlink(tmp)
-                return next_v
-            except FileExistsError:
-                os.unlink(tmp)  # lost the race: recompute against new latest
+                return self._commit(op, schema_json, files_on(base), base)
+            except TxConflict:
                 continue
-        raise TxConflict(f"could not claim a version after {max_retries} attempts")
+        raise TxConflict(f"{op}: no free version after {_MAX_REBASES} attempts")
 
     # ---------------------------------------------------------- data files
 
-    @staticmethod
-    def _collect_stats(files: list[str]) -> dict[str, dict[str, list]]:
-        """Per-file column [min, max] from parquet footers (no data read) —
-        the manifest-embedded statistics data skipping prunes on. Only
-        JSON-stable scalar types are kept; other columns are simply not
-        skippable. O(files) driver work at commit time, the same trade
-        Iceberg makes writing manifest entries."""
+    def _write_files(self, df: DataFrame) -> dict[str, dict[str, list]]:
+        """Write a batch of immutable data files; return ``{path: stats}``.
+        Executor-parallel parquet write into a unique batch dir — nothing is
+        visible to readers until the manifest referencing it commits. Spark
+        writes one zero-row file for an empty result: it is deleted, so a
+        manifest never lists a file without rows."""
         import pyarrow.parquet as pq
 
-        out: dict[str, dict[str, list]] = {}
-        for path in files:
-            md = pq.ParquetFile(path).metadata
-            cols: dict[str, list] = {}
-            for ci, name in enumerate(md.schema.names):
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        mins = []
-                        break
-                    mins.append(st.min)
-                    maxs.append(st.max)
-                if mins and all(
-                    isinstance(v, (int, float, str, bool))
-                    for v in (min(mins), max(maxs))
-                ):
-                    cols[name] = [min(mins), max(maxs)]
-            out[path] = cols
-        return out
-
-    def _write_files(self, df: DataFrame) -> list[str]:
-        """Write a batch of immutable data files; return their paths.
-        Executor-parallel parquet write into a unique batch dir — nothing is
-        visible to readers until the manifest referencing it commits."""
         batch = os.path.join(self.data_dir, uuid.uuid4().hex)
         df.write.parquet(batch)
-        return sorted(
-            os.path.join(batch, f) for f in os.listdir(batch) if f.endswith(".parquet")
-        )
+        out = {}
+        for name in sorted(os.listdir(batch)):
+            if not name.endswith(".parquet"):
+                continue
+            path = os.path.join(batch, name)
+            md = pq.ParquetFile(path).metadata
+            if md.num_rows == 0:
+                os.unlink(path)
+            else:
+                out[path] = _footer_stats(md)
+        return out
 
     @staticmethod
     def _check_schema(df: DataFrame, snap: TxSnapshot) -> None:
@@ -238,21 +233,20 @@ class TxTable:
         t = cls(path)
         if t.latest_version() is not None:
             raise FileExistsError(f"table already exists at {path}")
-        files = t._write_files(df)
-        t._commit(files, "create", df.schema.json())
+        t._commit("create", df.schema.json(), t._write_files(df), None)
         return t
 
     def append(self, df: DataFrame) -> int:
         snap = self.snapshot()
         self._check_schema(df, snap)
-        files = self._write_files(df)
-        # base_files sentinel: append merges with latest at claim time, so
-        # concurrent appends BOTH land (no lost updates, no conflict error)
-        return self._commit(files, "append", snap.schema_json, base_files=files)
+        new = self._write_files(df)
+        return self._commit_on_latest(
+            "append", snap.schema_json, lambda base: {**base.entries(), **new}
+        )
 
     def overwrite(self, df: DataFrame) -> int:
-        files = self._write_files(df)
-        return self._commit(files, "overwrite", df.schema.json())
+        new = self._write_files(df)
+        return self._commit_on_latest("overwrite", df.schema.json(), lambda base: new)
 
     def read(
         self,
@@ -277,43 +271,33 @@ class TxTable:
 
     def delete_where(self, spark: SparkSession, col: str, lower, upper) -> int:
         """Delete rows with ``col`` in [lower, upper] (the GDPR-erasure /
-        retention shape): untouched files are KEPT AS-IS (manifest stats
-        prove non-intersection), only intersecting files are rewritten
-        without the matching rows — Delta's file-pruned DELETE. Serializable
-        via expected_version."""
+        retention shape); rows with a NULL ``col`` are kept. Untouched files
+        are KEPT AS-IS with their stats (manifest stats prove
+        non-intersection), only intersecting files are rewritten without the
+        matching rows — Delta's file-pruned DELETE."""
+        from pyspark.sql import functions as F
+
         snap = self.snapshot()
         touched = set(snap.prune(col, lower, upper))
-        kept = [f for f in snap.files if f not in touched]
-        new_files: list[str] = []
+        files = {f: s for f, s in snap.entries().items() if f not in touched}
         if touched:
+            c = F.col(col)
             survivors = (
                 spark.read.schema(snap.schema())
                 .parquet(*sorted(touched))
-                .where(f"NOT ({col} >= {lower!r} AND {col} <= {upper!r})")
+                .where(c.isNull() | ~c.between(lower, upper))
             )
-            if survivors.limit(1).count() > 0:
-                new_files = self._write_files(survivors)
-        return self._commit(
-            new_files,
-            "delete",
-            snap.schema_json,
-            expected_version=snap.version,
-            keep_files=kept,
-        )
+            files.update(self._write_files(survivors))
+        return self._commit("delete", snap.schema_json, files, snap)
 
     def merge(self, spark: SparkSession, updates: DataFrame, key: str) -> int:
         """MERGE (SCD-1 upsert): updates win on ``key``, unmatched insert.
         Serializable: conflicts raise TxConflict rather than losing either
-        writer's rows. (Full rewrite; Delta/Iceberg prune to matched files —
-        same semantics, an IO optimization this format can add per-file
-        min/max stats for.)"""
+        writer's rows. (Full rewrite; Delta/Iceberg prune to matched files.)"""
         snap = self.snapshot()
-        current = self.read(spark)
+        current = self.read(spark, version=snap.version)
         merged = current.join(updates, key, "left_anti").unionByName(updates)
-        files = self._write_files(merged)
-        return self._commit(
-            files, "merge", snap.schema_json, expected_version=snap.version
-        )
+        return self._commit("merge", snap.schema_json, self._write_files(merged), snap)
 
     def compact(self, spark: SparkSession, n_files: int) -> int:
         """Log-aware compaction: rewrite the current snapshot into
@@ -321,23 +305,22 @@ class TxTable:
         the table path never vanishes (contrast maintenance.compact_table's
         rename window) and old files stay until vacuum."""
         snap = self.snapshot()
-        files = self._write_files(self.read(spark).repartition(n_files))
-        return self._commit(
-            files, "compact", snap.schema_json, expected_version=snap.version
-        )
+        current = self.read(spark, version=snap.version)
+        files = self._write_files(current.repartition(n_files))
+        return self._commit("compact", snap.schema_json, files, snap)
 
     def rollback(self, to_version: int) -> int:
         old = self.snapshot(to_version)
-        cur = self.snapshot()
         return self._commit(
-            old.files, f"rollback:{to_version}", old.schema_json,
-            expected_version=cur.version,
+            f"rollback:{to_version}", old.schema_json, old.entries(), self.snapshot()
         )
 
     def vacuum(self, keep_last: int = 2) -> list[str]:
         """Delete data files unreferenced by the ``keep_last`` newest
         manifests (and drop older manifests). Time travel beyond the horizon
         is traded for space — same contract as Delta VACUUM."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         vs = self.versions()
         keep_vs = vs[-keep_last:]
         live: set[str] = set()

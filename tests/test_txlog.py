@@ -62,29 +62,71 @@ def test_merge_upsert_semantics(spark, nation, tmp_path):
     assert out.where(F.col("n_nationkey") >= 1000).count() == 2
 
 
-def test_rewrite_conflict_detected(spark, nation, tmp_path):
+def _commit_first_during_next_write(monkeypatch, other):
+    """Make ``other()`` commit right after the next ``_write_files`` returns,
+    i.e. between a writer reading its base version and committing."""
+    real = TxTable._write_files
+    fired = []
+
+    def write_then_race(self, df):
+        files = real(self, df)
+        if not fired:
+            fired.append(True)
+            other()
+        return files
+
+    monkeypatch.setattr(TxTable, "_write_files", write_then_race)
+
+
+def test_rewrite_conflict_detected(spark, nation, tmp_path, monkeypatch):
     """Serializable rewrites: a merge computed against a stale snapshot must
     raise TxConflict, not clobber the interleaved commit."""
     t = TxTable.create(spark, str(tmp_path / "t"), nation)
-    stale = t.snapshot()
-    t.append(nation.withColumn("n_nationkey", F.col("n_nationkey") + 100))
-    files = t._write_files(nation.limit(1))
+    extra = nation.withColumn("n_nationkey", F.col("n_nationkey") + 100)
+    _commit_first_during_next_write(monkeypatch, lambda: TxTable(t.path).append(extra))
     with pytest.raises(TxConflict):
-        t._commit(files, "merge", stale.schema_json, expected_version=stale.version)
+        t.merge(spark, nation.limit(1), key="n_nationkey")
+    assert [s.op for s in t.history()] == ["create", "append"]
+    assert t.read(spark).count() == 50
+    # the primitive itself: a manifest built on a stale base never lands
+    stale = t.snapshot(0)
+    with pytest.raises(TxConflict):
+        t._commit("merge", stale.schema_json, stale.entries(), stale)
+    assert t.latest_version() == 1
 
 
-def test_concurrent_appends_both_land(spark, nation, tmp_path):
-    """Optimistic concurrency for appends: simulate a race by pre-claiming
-    the version an appender would want — its retry merges both file lists."""
+def test_concurrent_appends_both_land(spark, nation, tmp_path, monkeypatch):
+    """Optimistic concurrency for appends: writer B commits while writer A is
+    writing its files — A rebases onto B's version and both land."""
     t = TxTable.create(spark, str(tmp_path / "t"), nation)
-    # writer A prepares files, then writer B commits first
-    a_files = t._write_files(nation.where(F.col("n_nationkey") < 3))
-    t.append(nation.where(F.col("n_nationkey").between(3, 5)))  # B wins v1
-    snap = t.snapshot(0)
-    v = t._commit(a_files, "append", snap.schema_json, base_files=a_files)
+    b_rows = nation.where(F.col("n_nationkey").between(3, 5))
+    _commit_first_during_next_write(monkeypatch, lambda: TxTable(t.path).append(b_rows))
+    v = t.append(nation.where(F.col("n_nationkey") < 3))
     assert v == 2
+    assert [s.op for s in t.history()] == ["create", "append", "append"]
     # both appends present on top of the original 25
     assert t.read(spark).count() == 25 + 3 + 3
+
+
+def test_racing_create_raises_and_keeps_winner(spark, nation, tmp_path, monkeypatch):
+    """Two creators of one path: the one that commits second gets TxConflict
+    instead of committing its table as v1 over the winner's."""
+    path = str(tmp_path / "t")
+    winner = nation.where(F.col("n_nationkey") < 5)
+    _commit_first_during_next_write(monkeypatch, lambda: TxTable.create(spark, path, winner))
+    with pytest.raises(TxConflict):
+        TxTable.create(spark, path, nation)
+    t = TxTable(path)
+    assert t.versions() == [0]
+    assert t.read(spark).count() == 5
+
+
+def test_commit_create_over_existing_v0_raises(spark, nation, tmp_path):
+    t = TxTable.create(spark, str(tmp_path / "t"), nation)
+    files = t._write_files(nation)
+    with pytest.raises(TxConflict):
+        t._commit("create", nation.schema.json(), files, None)
+    assert t.versions() == [0]
 
 
 def test_compact_no_visibility_gap_and_vacuum(spark, nation, tmp_path):
@@ -115,6 +157,30 @@ def test_rollback_is_a_new_commit(spark, nation, tmp_path):
     assert v == 2  # history append-only: rollback doesn't erase v1
     assert t.read(spark).count() == 25
     assert t.snapshot().op == "rollback:0"
+
+
+def test_rollback_then_vacuum_keeps_stats_for_pruning(spark, nation, tmp_path):
+    """Rollback re-commits the old manifest's stats, so data skipping still
+    works once vacuum has dropped the manifest rolled back to."""
+    t = TxTable.create(spark, str(tmp_path / "t"), nation)  # keys 0..24
+    t.append(nation.withColumn("n_nationkey", F.col("n_nationkey") + 100))
+    t.overwrite(nation.limit(1))
+    t.rollback(1)
+    t.vacuum(keep_last=1)
+    assert t.versions() == [3]
+    snap = t.snapshot()
+    assert all("n_nationkey" in snap.stats[f] for f in snap.files)
+    assert 0 < len(snap.prune("n_nationkey", 100, 110)) < len(snap.files)
+    assert t.read(spark, where=("n_nationkey", 100, 110)).count() == 11
+
+
+def test_vacuum_rejects_keep_last_below_one(spark, nation, tmp_path):
+    t = TxTable.create(spark, str(tmp_path / "t"), nation)
+    t.overwrite(nation.limit(1))
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            t.vacuum(keep_last=bad)
+    assert t.versions() == [0, 1]
 
 
 def test_data_skipping_prunes_files(spark, nation, tmp_path):
@@ -165,6 +231,36 @@ def test_delete_where_partial_file_rewrite(spark, nation, tmp_path):
     assert out.count() == 20
     assert out.where(F.col("n_nationkey").between(5, 9)).count() == 0
     assert out.where(F.col("n_nationkey") < 5).count() == 5
+
+
+def test_delete_where_keeps_null_keys(spark, tmp_path):
+    """NULL is not in any range: a file-pruned DELETE must not drop it."""
+    df = spark.createDataFrame([(1,), (None,), (5,), (9,)], "k INT").coalesce(1)
+    t = TxTable.create(spark, str(tmp_path / "t"), df)
+    t.delete_where(spark, "k", 4, 6)
+    assert sorted(t.read(spark).collect(), key=lambda r: (r.k is None, r.k)) == [
+        (1,), (9,), (None,)
+    ]
+
+
+def test_delete_emptying_a_file_commits_no_zero_row_file(spark, nation, tmp_path):
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = TxTable.create(spark, str(tmp_path / "t"), nation)  # keys 0..24
+    t.append(nation.withColumn("n_nationkey", F.col("n_nationkey") + 100))
+    t.delete_where(spark, "n_nationkey", 100, 199)  # empties the appended file
+    snap = t.snapshot()
+    assert all(pq.read_metadata(f).num_rows > 0 for f in snap.files)
+    on_disk = [
+        os.path.join(d, f)
+        for d, _, names in os.walk(t.data_dir)
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    assert all(pq.read_metadata(f).num_rows > 0 for f in on_disk)
+    assert t.read(spark).count() == 25
 
 
 class TestChangeFeed:
