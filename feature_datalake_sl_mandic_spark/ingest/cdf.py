@@ -24,16 +24,19 @@ re-reads the state from the target log:
   no-op, never a double-MERGE.
 
 Scale shape: the feed is one full-outer join keyed on the table key
-(snapshot-derived, no writer-side bookkeeping); the apply is one anti-join
-+ union writing a new snapshot — the same IO MERGE itself costs. The only
-driver-side data are the change-type counts (<= 4 rows) for the audit row.
+(snapshot-derived, no writer-side bookkeeping); the apply is one more
+full-outer join of the current target with the feed, writing a new
+snapshot — the same IO MERGE itself costs. The feed is consumed once, by
+that write: the change-type counts for the audit row are observed metrics
+of the same job, so an apply runs one Spark job and brings no rows to the
+driver.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from feature_datalake_sl_mandic_spark.ingest import history as hist
@@ -104,37 +107,39 @@ def apply_cdf_batch(
     if to_v is None or to_v <= from_v:
         return summary  # replay after crash-post-commit, or nothing new
 
-    # Pin the feed before anything reads it: it is consumed TWICE (the
-    # change-type counts collect and the merged write), and each unpinned
-    # evaluation would replay the full-outer snapshot join (round-8 advice).
-    feed = source.change_feed(
-        spark, key, from_version=from_v, to_version=to_v
-    ).localCheckpoint()
-    # bounded control-plane collect: at most 4 change-type rows
-    counts = {
-        r["_change_type"]: r["n"]
-        for r in feed.groupBy("_change_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    obs = Observation()
+    change = F.col("_change_type")
+    feed = source.change_feed(spark, key, from_version=from_v, to_version=to_v).observe(
+        obs,
+        *[
+            F.count_if(change == kind).alias(kind)
+            for kind in ("insert", "delete", "update_postimage")
+        ],
+    )
     snap = target.snapshot()
-    current = target.read(spark, version=snap.version)
-    upserts = feed.where(
-        F.col("_change_type").isin("insert", "update_postimage")
-    ).drop("_change_type")
-    changed_keys = feed.where(
-        F.col("_change_type").isin("insert", "update_postimage", "delete")
-    ).select(key).distinct()
+    current = target.read(spark, version=snap.version).alias("c")
+    # one row per changed key: its new image, or its delete
+    changes = feed.where(change != "update_preimage").alias("f")
+    in_feed = F.col("f._change_type").isNotNull()
     merged = (
-        current.join(changed_keys, on=key, how="left_anti")
-        .unionByName(upserts.select(*current.columns))
+        current.join(changes, on=key, how="full_outer")
+        .where(~in_feed | (F.col("f._change_type") != "delete"))
+        .select(
+            *[
+                F.col(key) if c == key
+                else F.when(in_feed, F.col(f"f.{c}")).otherwise(F.col(f"c.{c}")).alias(c)
+                for c in current.columns
+            ]
+        )
     )
     tv = target._commit(
         f"{CDF_OP_PREFIX}{to_v}", snap.schema_json, target._write_files(merged), snap
     )
     summary.update(
         applied=True,
-        n_insert=int(counts.get("insert", 0)),
-        n_delete=int(counts.get("delete", 0)),
-        n_update=int(counts.get("update_postimage", 0)),
+        n_insert=int(obs.get["insert"]),
+        n_delete=int(obs.get["delete"]),
+        n_update=int(obs.get["update_postimage"]),
         target_version=tv,
     )
     return summary

@@ -6,15 +6,17 @@ append at ``:136-141``) and later reads it back with a 30-day
 partition-pruned MAX…GROUP BY in BigQuery SQL
 (``verifica_carga_slmandicprd.py:74-82``).
 
-Here the history is a date-partitioned parquet table; ``latest_runs`` is the
-same aggregation as a DataFrame plan, so the partition filter prunes files
-(partition column = execution_date) instead of relying on a warehouse.
+Here the history is a date-partitioned parquet table (partition column =
+execution_date). Its rows are control plane, a handful per run, so like the
+pending-tables manifest (``manifest.py``) the driver writes and reads them
+itself with pyarrow instead of running Spark jobs: ``append_run`` writes one
+run's rows as one parquet file, and ``latest_runs`` prunes to the last N
+days' partitions, takes the max per table in Arrow and hands Spark the result
+as a local relation.
 
 History is written once per run: ``append_run`` takes all of a run's rows
-and appends them in one Spark job. A plain parquet directory has no commit
-protocol, so concurrent appends to it (one per pipeline worker thread) clash
-on the shared ``_temporary`` directory and can leave duplicate rows; a
-single writer per run cannot. Every row of a run carries the same timestamp,
+and writes them as one file, renamed into place so no reader (Spark or
+pyarrow) sees a partial one. Every row of a run carries the same timestamp,
 taken before any source is read, so a source change that lands mid-run is
 newer than the run and is picked up by the next one.
 
@@ -29,22 +31,28 @@ from __future__ import annotations
 import datetime as dt
 import os
 import time
+import uuid
 
-from pyspark.sql import DataFrame, Observation, Row, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Reference's explicit metadata schema (spark_ingest_slmandicprd.py:115-121),
-# all nullable.
-HISTORY_SCHEMA = T.StructType(
+# all nullable. FILE_SCHEMA is what a history file holds; execution_date is
+# the hive partition. Files written by Spark hold execution_time as INT96,
+# which pyarrow reads as naive ns: reading with HISTORY_SCHEMA casts every
+# file to one type.
+FILE_SCHEMA = pa.schema(
     [
-        T.StructField("table_name", T.StringType(), True),
-        T.StructField("name_dataBase", T.StringType(), True),
-        T.StructField("row_count", T.IntegerType(), True),
-        T.StructField("execution_date", T.DateType(), True),
-        T.StructField("execution_time", T.TimestampType(), True),
+        ("table_name", pa.string()),
+        ("name_dataBase", pa.string()),
+        ("row_count", pa.int32()),
+        ("execution_time", pa.timestamp("us", tz="UTC")),
     ]
 )
+HISTORY_SCHEMA = FILE_SCHEMA.append(pa.field("execution_date", pa.date32()))
 
 
 def observed_count(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -70,29 +78,31 @@ def append_run(
     rows: list[tuple[str, int]],
     execution_time: dt.datetime | None = None,
 ) -> None:
-    """Append one run's audit rows, ``(table_name, row_count)`` each, in one
-    write (S8/S11 parity), partitioned by execution_date so the freshness
-    lookup partition-prunes. No rows, no write."""
+    """Append one run's audit rows, ``(table_name, row_count)`` each, as one
+    parquet file (S8/S11 parity) in its execution_date partition, so the
+    freshness lookup partition-prunes. No rows, no write."""
     if not rows:
         return
     execution_time = execution_time or utcnow()
-    records = [
-        Row(
-            table_name=table_name,
-            name_dataBase=database,
-            row_count=int(row_count),
-            execution_date=execution_time.date(),
-            execution_time=execution_time,
-        )
-        for table_name, row_count in rows
-    ]
-    (
-        spark.createDataFrame(records, schema=HISTORY_SCHEMA)
-        .coalesce(1)
-        .write.mode("append")
-        .partitionBy("execution_date")
-        .parquet(history_path(lake_dir))
+    names, counts = zip(*rows)
+    table = pa.table(
+        {
+            "table_name": list(names),
+            "name_dataBase": [database] * len(rows),
+            "row_count": [int(c) for c in counts],
+            # a naive time is local time, the instant Spark stores for it
+            "execution_time": [execution_time.astimezone(dt.timezone.utc)] * len(rows),
+        },
+        schema=FILE_SCHEMA,
     )
+    part = os.path.join(
+        history_path(lake_dir), f"execution_date={execution_time.date().isoformat()}"
+    )
+    os.makedirs(part, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(part, "." + name)  # dot files are hidden from readers
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(part, name))
 
 
 def latest_runs(
@@ -100,15 +110,20 @@ def latest_runs(
 ) -> DataFrame:
     """(table_name, last_exec): MAX(execution_time) per table over the last N
     days — the reference's BQ query (``verifica_carga_slmandicprd.py:74-82``)
-    as a partition-pruned DataFrame aggregation. No history yet (first load)
-    gives no rows; any other read error raises."""
+    as a partition-pruned Arrow aggregation, returned as a local relation.
+    No history yet (first load) gives no rows; any other read error raises."""
     path = history_path(lake_dir)
-    if not os.path.exists(path):
-        return spark.createDataFrame([], "table_name string, last_exec timestamp")
-    cutoff = F.current_timestamp() - F.expr(f"INTERVAL {int(lookback_days)} DAYS")
-    return (
-        spark.read.parquet(path)
-        .where(F.col("execution_date") >= F.to_date(cutoff))
-        .groupBy("table_name")
-        .agg(F.max("execution_time").alias("last_exec"))
+    if os.path.exists(path):
+        cutoff = (utcnow() - dt.timedelta(days=int(lookback_days))).date()
+        runs = ds.dataset(path, schema=HISTORY_SCHEMA, partitioning="hive").to_table(
+            columns=["table_name", "execution_time"],
+            filter=ds.field("execution_date") >= cutoff,
+        )
+    else:
+        runs = HISTORY_SCHEMA.empty_table()
+    latest = runs.group_by("table_name").aggregate([("execution_time", "max")])
+    return spark.createDataFrame(
+        latest.select(["table_name", "execution_time_max"]).rename_columns(
+            ["table_name", "last_exec"]
+        )
     )

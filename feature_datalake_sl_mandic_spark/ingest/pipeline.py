@@ -13,12 +13,14 @@ anti-patterns fixed, both self-reported or survey-flagged:
 - row counts come from ``observe()`` during the write, not a second source
   scan (``spark_ingest_slmandicprd.py:108`` anti-pattern).
 
-The worker threads only write table data, each to its own directory. The
-history is written once per run, after the pool, with one row per table
-that ingested: the history is a single parquet directory without a commit
-protocol, so one append per worker would race (see ``history.py``). A
-failed history write raises; the tables it would have recorded stay stale
-and are re-detected by the next run.
+The worker threads only write table data, each to its own directory, and
+each table costs one Spark job. The control plane runs on the driver
+without Spark jobs: the freshness lookup reads the history with pyarrow
+(``history.latest_runs``), the manifest and status file are JSON, and the
+history is written once per run, after the pool, as one parquet file with a
+row per table that ingested. The only other job is the change-detection
+collect. A failed history write raises; the tables it would have recorded
+stay stale and are re-detected by the next run.
 """
 
 from __future__ import annotations

@@ -52,6 +52,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class TxConflict(RuntimeError):
@@ -261,8 +262,8 @@ class TxTable:
         pushed filter)."""
         snap = self.snapshot(version)
         files = snap.files if where is None else snap.prune(*where)
-        if not files:
-            return spark.createDataFrame([], snap.schema())
+        if not files:  # a local relation: no Spark job when consumed
+            return spark.createDataFrame(to_arrow_schema(snap.schema()).empty_table())
         df = spark.read.schema(snap.schema()).parquet(*files)
         if where is not None:
             col, lower, upper = where
@@ -317,8 +318,10 @@ class TxTable:
 
     def vacuum(self, keep_last: int = 2) -> list[str]:
         """Delete data files unreferenced by the ``keep_last`` newest
-        manifests (and drop older manifests). Time travel beyond the horizon
-        is traded for space — same contract as Delta VACUUM."""
+        manifests (and drop older manifests). A batch directory whose data
+        files are all unreferenced is removed whole; one still being written
+        (it holds Spark's ``_temporary``) is left alone. Time travel beyond
+        the horizon is traded for space — same contract as Delta VACUUM."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         vs = self.versions()
@@ -329,13 +332,18 @@ class TxTable:
         removed = []
         for batch in os.listdir(self.data_dir) if os.path.isdir(self.data_dir) else []:
             bdir = os.path.join(self.data_dir, batch)
-            for f in list(os.listdir(bdir)):
-                p = os.path.join(bdir, f)
-                if f.endswith(".parquet") and p not in live:
-                    os.unlink(p)
-                    removed.append(p)
-            if not os.listdir(bdir):
+            names = os.listdir(bdir)
+            if "_temporary" in names:
+                continue  # a write still in flight
+            files = [os.path.join(bdir, f) for f in names if f.endswith(".parquet")]
+            dead = [p for p in files if p not in live]
+            removed.extend(dead)
+            if len(dead) == len(files):
+                # also drops the _SUCCESS and .crc files Spark writes beside them
                 shutil.rmtree(bdir)
+            else:
+                for p in dead:
+                    os.unlink(p)
         for v in vs[:-keep_last]:
             os.unlink(os.path.join(self.log_dir, _vname(v)))
         return removed

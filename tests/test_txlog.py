@@ -4,6 +4,8 @@ compaction with no visibility gap."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,9 +145,16 @@ def test_compact_no_visibility_gap_and_vacuum(spark, nation, tmp_path):
     # pre-compaction version still readable (no rename window, no lost path)
     assert t.read(spark, version=v - 1).count() == before
 
+    # a batch another writer is still writing: not dead, whatever it holds
+    in_flight = os.path.join(t.data_dir, "in-flight")
+    os.makedirs(os.path.join(in_flight, "_temporary", "0"))
     removed = t.vacuum(keep_last=1)
     assert removed  # old files actually reclaimed
     assert t.read(spark).count() == before  # latest unaffected
+    # no dead batch directory is left behind (Spark's _SUCCESS/.crc files too)
+    live_batches = {os.path.dirname(f) for f in t.snapshot().files}
+    batches = {os.path.join(t.data_dir, b) for b in os.listdir(t.data_dir)}
+    assert batches == live_batches | {in_flight}
     with pytest.raises(FileNotFoundError):
         t.snapshot(version=0)  # beyond the retention horizon
 
